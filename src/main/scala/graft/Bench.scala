@@ -1,34 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r16 (guide §2.2/§2.5): AQE's coalescer floors partitions at
-      // minPartitionSize (default 1m) — with parallelismFirst=true that
-      // floor is the ONLY thing deciding post-shuffle parallelism, and
-      // every sub-MB shuffle collapses to one partition. This suite's
-      // shuffles are byte-small but CPU-dense (regex scoring, levenshtein
-      // verification, array kernels), so the coalesced single task
-      // serializes the heaviest stage of exactly the most expensive
-      // queries (measured: q_fuzzy_join 3.9→1.1 s, q_entity_resolution
-      // 3.1→1.7 s, q_twopass 11→9 s). 64k keeps small-data parallelism;
-      // at production scale partitions are 100s of MB and a 64k-vs-1m
-      // floor is indistinguishable — nothing here encodes the core count.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // per-run warehouse: managed-table locations from a previous process
-      // must not leak into (or fail) this run's bucketed-write entries
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // warm up session machinery (codegen, parquet reader) so the first
     // timed query doesn't absorb ~5s of one-time JVM/session cost
     spark.read.parquet(s"$sfDir/region.parquet").count()

@@ -25,27 +25,20 @@ object SparkEntry {
     * additionally normalize NTZ→TIMESTAMP, which `withWatermark` requires
     * (`StreamingValidate.ensureEventTime`). */
   private def T(s: SparkSession, dir: String, n: String): DataFrame = {
-    val df0 = s.read.parquet(s"$dir/$n.parquet")
-    val df =
-      if (n == "events" && df0.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        df0.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else df0
-    if (s.conf.get("spark.graft.scan.rebalance", "false").toBoolean)
-      rebalanceScan(s, df, s"$dir/$n.parquet")
+    val df = s.read.parquet(s"$dir/$n.parquet")
+    if (n == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df
   }
 
   /** [[T]] + [[rebalanceScan]]: the opt-in loader for queries whose
     * pre-exchange map work is heavy enough that splitting the
-    * single-row-group bench scan wins (measured per query, r16). When the
-    * global `spark.graft.scan.rebalance` experiment flag is on, [[T]]
-    * already applied the rebalance — don't stack a second pass (r16
-    * ADVICE). */
-  private def TR(s: SparkSession, dir: String, n: String): DataFrame = {
-    val df = T(s, dir, n)
-    if (s.conf.get("spark.graft.scan.rebalance", "false").toBoolean) df
-    else rebalanceScan(s, df, s"$dir/$n.parquet")
-  }
+    * single-row-group bench scan wins (measured per query, r16). */
+  private def TR(s: SparkSession, dir: String, n: String): DataFrame =
+    rebalanceScan(s, T(s, dir, n), s"$dir/$n.parquet")
+
+  /** Parquet bytes per task below which [[rebalanceScan]] stops splitting. */
+  private final val MinTaskBytes = 8192L
 
   /** r16 (guide §2.5 "input skew: one huge unsplittable file"): the
     * testdata tables are SINGLE-row-group parquet files, so every scan is
@@ -53,21 +46,19 @@ object SparkEntry {
     * hashing, URL parsing) serializes on one core regardless of
     * `local[N]`. Repartition right after the read when — and only when —
     * the scan is underparallelized: the target is derived from input SIZE
-    * (≥ `spark.graft.scan.minTaskBytes`, default 8 KB of parquet per
-    * task, so dimension tables don't fan out into empty tasks) and capped
-    * at the session's default parallelism. At production scale a table
-    * arrives as many files / row groups ≥ cores, `parts ≥ target`, and
-    * this is a no-op — nothing here is tuned to the local core count.
+    * (≥ [[MinTaskBytes]] of parquet per task, so dimension tables don't
+    * fan out into empty tasks) and capped at the session's default
+    * parallelism. At production scale a table arrives as many files /
+    * row groups ≥ cores, `parts ≥ target`, and this is a no-op — nothing
+    * here is tuned to the local core count.
     *
     * Measured A/B over the whole suite (OPTIMIZATION_r16.md): the extra
     * round-robin exchange pays off only where the per-row map work is
     * heavy (regex scoring, covariance, rerank kernels) and LOSES ~0.1–0.3 s
     * per query everywhere else — so it is opt-in per query ([[TR]]),
-    * not the [[T]] default. `spark.graft.scan.rebalance=true` forces it
-    * globally for experiments. */
+    * not the [[T]] default. */
   private def rebalanceScan(s: SparkSession, df: DataFrame, path: String): DataFrame = {
     import scala.util.control.NonFatal
-    val minTaskBytes = s.conf.get("spark.graft.scan.minTaskBytes", "8192").toLong
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val conf = s.sparkContext.hadoopConfiguration
@@ -79,7 +70,7 @@ object SparkEntry {
       }
       val bytes = files.map(_.getLen).sum
       val target = math.min(s.sparkContext.defaultParallelism.toLong,
-        math.max(1L, bytes / minTaskBytes)).toInt
+        math.max(1L, bytes / MinTaskBytes)).toInt
       if (target <= 1 || files.length >= target) return df
       // Achievable scan parallelism WITHOUT a shuffle is the row-group
       // count, not `df.rdd.getNumPartitions` (r16 verdict + ADVICE):
@@ -1086,7 +1077,8 @@ object SparkEntry {
       // stage. Rows-only (standard LSH rationale: band-bucket membership
       // is not SQL-mirrorable) — content-pinned in RowsOnlyPinSpec; the
       // per-stage semantics are each oracle-checked by q_curation_e2e /
-      // q_pipeline_e2e, and invariance is smoked in tools/TwoPassSmoke.
+      // q_pipeline_e2e, and invariance is smoked in git show
+      // 721304f:src/test/scala/graft/tools/TwoPassSmoke.scala.
       val docs = TR(s, dir, "documents")
       val crawl = docs.select(col("doc_id"),
         concat(lit("https://www.crawl"), pmod(col("doc_id"), lit(50)).cast("string"),

@@ -78,27 +78,4 @@ object IncrementalIngest {
       .select(col("id_a"), col("id_b"))
     Clusters.mergeIncremental(assignment, vsIndex.unionByName(within))
   }
-
-  /** Runnable demo: treat doc_id < 100 of the harness corpus as today's
-    * batch and the rest as the ingested corpus. */
-  def main(args: Array[String]): Unit = {
-    val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val corpus = annotate(docs.filter(col("doc_id") >= 100), "doc_id", "text")
-    val batch = annotate(docs.filter(col("doc_id") < 100), "doc_id", "text")
-    val index = Dedup.buildSignatureIndex(corpus, "doc_id", "sig")
-    val sketch = Dedup.seenFilter(corpus, col("fp"), expectedItems = 100000)
-    val novel = novelDocs(batch, corpus.select("fp"), index, "doc_id",
-      seenFp = Some(sketch))
-    println(s"[ingest] batch=${batch.count()} novel=${novel.count()}")
-    spark.stop()
-  }
 }

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Chunking, LmScore, Sampling}
 
@@ -76,24 +76,5 @@ object MixturePipeline {
     Sampling.packSequences(interleaved, "vft", "n_tok", seqBudget)
       .select(col("chunk_id"), col("doc_id"), col("chunk_idx"),
         col(stratumCol), col("n_tok"), col("vft"), col("seq_id"))
-  }
-
-  /** Runnable demo over the harness testdata. */
-  def main(args: Array[String]): Unit = {
-    val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sf/documents.parquet").filter(col("text").isNotNull)
-    val out = assemble(docs)
-    val nSeq = out.agg(countDistinct(col("seq_id"))).first().getLong(0)
-    println(s"[mixture] chunks=${out.count()} sequences=$nSeq")
-    out.orderBy("vft").show(5, truncate = false)
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.Validate
 import graft.{filters => F}
@@ -13,11 +13,11 @@ import graft.ops.{Clusters, Dedup, TextAnalysis}
   *
   *   1. validate + clean text (`Required | Unicode | Strip`)
   *   2. language ID + quality score (map-only text analysis)
-  *   3. gate on quality and length
+  *   3. gate on quality (score ≥ 0.3) and length
   *   4. exact dedup by content fingerprint (one key-width shuffle)
-  *   5. near-dup removal via MinHash LSH (band equi-join) resolved to
-  *      TRANSITIVE clusters (connected components), keeping the min-id
-  *      representative of each cluster
+  *   5. near-dup removal via MinHash LSH (band equi-join, Jaccard ≥ 0.9)
+  *      resolved to TRANSITIVE clusters (connected components), keeping
+  *      the min-id representative of each cluster
   *
   * Every stage before (4) is shuffle-free; the whole pipeline is 2 shuffles
   * + the LSH band join + the (pair-sized, not corpus-sized) cluster
@@ -25,9 +25,7 @@ import graft.ops.{Clusters, Dedup, TextAnalysis}
   */
 object TrainingDataPipeline {
 
-  def curate(docs: DataFrame, minQuality: Double = 0.3,
-             nearDupThreshold: Double = 0.9,
-             materializeIntermediate: Boolean = true): DataFrame = {
+  def curate(docs: DataFrame): DataFrame = {
     // 1. validate/clean: reference-style chains, dropping irreparable rows
     val validated = Validate(docs,
       "text" -> (Macros.cleanText | F.MinLength(20)),
@@ -38,7 +36,7 @@ object TrainingDataPipeline {
       .withColumn("lang_guess", TextAnalysis.languageId(col("text")))
       .withColumn("quality", TextAnalysis.qualityScore(col("text")))
       .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")))
-      .filter(col("quality") >= minQuality)
+      .filter(col("quality") >= 0.3)
 
     // 4. exact dedup on the 128-bit fingerprint, keep lowest doc_id.
     // row_number-over-fp, not groupBy+self-join: one full-row exchange
@@ -56,9 +54,7 @@ object TrainingDataPipeline {
     // pipeline checkpoints to storage. Pinned, not persisted: a persist
     // here leaked into the session cacheManager with no releasing caller
     // (r10 verdict) — the pin dies with the returned frame's reference.
-    val exactDeduped =
-      if (materializeIntermediate) graft.ops.Checkpoints.pin(exactDeduped0).df
-      else exactDeduped0
+    val exactDeduped = graft.ops.Checkpoints.pin(exactDeduped0).df
 
     // 5. near-dup removal, cluster-resolved: candidate pairs → connected
     // components → keep exactly the min-id representative per transitive
@@ -70,26 +66,8 @@ object TrainingDataPipeline {
     // dedup (what curation needs) is preserved at a fraction of the
     // candidate volume.
     val nearDups = Dedup.minhashNearDups(exactDeduped, "doc_id", "text",
-      numHashes = 64, threshold = nearDupThreshold, // banding auto-selected for recall
+      numHashes = 64, threshold = 0.9, // banding auto-selected for recall
       maxBucket = 32)
     Clusters.dropNearDupClusters(exactDeduped, nearDups, "doc_id")
-  }
-
-  /** Runnable demo over the harness testdata. */
-  def main(args: Array[String]): Unit = {
-    val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = curate(docs)
-    println(s"[pipeline] input=${docs.count()} curated=${out.count()}")
-    out.select("doc_id", "lang_guess", "quality", "n_tokens").show(5, truncate = false)
-    spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.{Boilerplate, Dedup, Html, Robots, Urls}
+import graft.ops.{Boilerplate, Dedup, Robots, Urls}
 
 /** The FIRST-PASS half of a web-crawl curation pipeline — everything that
   * runs BEFORE the content-quality/near-dup stages of
@@ -29,20 +29,15 @@ import graft.ops.{Boilerplate, Dedup, Html, Robots, Urls}
   * site's first page), both before fingerprinting (else trivial chrome
   * differences defeat exact dedup).
   *
-  * Input columns: (idCol: long, urlCol: string, textCol: string).
-  * Output: (idCol, url_canonical, domain, text_clean) — one row per
+  * Input columns: (doc_id: long, url: string, text: string).
+  * Output: (doc_id, url_canonical, domain, text_clean) — one row per
   * surviving document. Every stage is oracle-checked individually
   * (q_url_blocklist / q_url_dedup / q_boilerplate_domain /
   * q_dedup_units / q_fingerprint); this composition is spec-pinned.
   */
 object WebCrawlCuration {
 
-  /** `htmlInput = true` inserts the [[Html.htmlToText]] extraction as
-    * stage 0 — positioned AFTER the URL-level stages (which never read
-    * text), so rows the blocklist and URL dedup drop never pay the
-    * extraction regexes.
-    *
-    * `spanK > 0` inserts [[Dedup.dedupSpansKeepFirst]] as stage 4b —
+  /** `spanK > 0` inserts [[Dedup.dedupSpansKeepFirst]] as stage 4b —
     * AFTER unit keep-first (so syndication-heavy mass dies at cheap
     * unit granularity before the token-level ranking pays) and before
     * the exact-fingerprint stage. Opt-in because it whitespace-
@@ -56,29 +51,21 @@ object WebCrawlCuration {
     * before the operator's blocklist, and like the blocklist it never
     * reads text, so disallowed captures pay nothing downstream. */
   def curate(crawl: DataFrame, blockedDomains: Seq[String],
-             idCol: String = "doc_id", urlCol: String = "url",
-             textCol: String = "text",
              boilerplateMinDocs: Long = 3L,
              delim: String = "\n", joinSep: String = "\n",
-             materializeIntermediate: Boolean = true,
-             htmlInput: Boolean = false,
              spanK: Int = 0,
              robotsRules: Option[DataFrame] = None): DataFrame = {
     // 0. site policy (robots), 1. blocklist, then 2. canonical-URL dedup
     // (adds url_canonical)
     val politeCrawl = robotsRules match {
-      case Some(rules) => Robots.filterAllowed(crawl, urlCol, idCol, rules)
+      case Some(rules) => Robots.filterAllowed(crawl, "url", "doc_id", rules)
       case None => crawl
     }
     val allowed =
       if (blockedDomains.isEmpty) politeCrawl
-      else Urls.filterBlockedDomains(politeCrawl, urlCol, blockedDomains)
-    val byUrl1 = Urls.dedupByUrl(allowed, urlCol, idCol)
-      .withColumn("domain", Urls.registrableDomain(col(urlCol)))
-    // 0. (optional, map-only) raw markup → text before any content stage
-    val byUrl0 =
-      if (htmlInput) byUrl1.withColumn(textCol, Html.htmlToText(col(textCol)))
-      else byUrl1
+      else Urls.filterBlockedDomains(politeCrawl, "url", blockedDomains)
+    val byUrl0 = Urls.dedupByUrl(allowed, "url", "doc_id")
+      .withColumn("domain", Urls.registrableDomain(col("url")))
     // byUrl feeds BOTH the metadata branch and the boilerplate branch —
     // without materialization the blocklist + URL-dedup exchange
     // recomputes once per branch (same pattern as TrainingDataPipeline;
@@ -86,33 +73,31 @@ object WebCrawlCuration {
     // Pinned, not persisted: a persist here leaked into the session
     // cacheManager with no releasing caller (r10 verdict) — the pin's
     // storage lifetime is the returned frame's reference.
-    val byUrl =
-      if (materializeIntermediate) graft.ops.Checkpoints.pin(byUrl0).df
-      else byUrl0
+    val byUrl = graft.ops.Checkpoints.pin(byUrl0).df
 
-    // 3. per-domain boilerplate (returns idCol + text_clean; re-join the
+    // 3. per-domain boilerplate (returns doc_id + text_clean; re-join the
     // surviving ids back to their URL metadata — id-keyed, the same
     // exchange width as the reassembly itself)
-    val meta = byUrl.select(col(idCol), col("url_canonical"), col("domain"))
+    val meta = byUrl.select(col("doc_id"), col("url_canonical"), col("domain"))
     val deboiled = Boilerplate.removeFrequentLinesByStratum(
-      byUrl, idCol, "domain", textCol, minDocs = boilerplateMinDocs,
+      byUrl, "doc_id", "domain", "text", minDocs = boilerplateMinDocs,
       delim = delim, joinSep = joinSep)
 
     // 4. corpus-wide keep-first unit dedup on the de-boilerplated text
-    val unitDeduped0 = Dedup.dedupUnitsKeepFirst(deboiled, idCol, "text_clean",
+    val unitDeduped0 = Dedup.dedupUnitsKeepFirst(deboiled, "doc_id", "text_clean",
       delim = delim, joinSep = joinSep)
     // 4b. (opt-in) duplicated-span excision on what units left behind
     val unitDeduped =
-      if (spanK > 0) Dedup.dedupSpansKeepFirst(unitDeduped0, idCol, "text_clean", k = spanK)
+      if (spanK > 0) Dedup.dedupSpansKeepFirst(unitDeduped0, "doc_id", "text_clean", k = spanK)
       else unitDeduped0
 
     // 5. exact content dedup on the cleaned text, keep min id
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col("text_clean").cast("binary"))).orderBy(col(idCol))
+      .partitionBy(md5(col("text_clean").cast("binary"))).orderBy(col("doc_id"))
     unitDeduped
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-      .join(meta, Seq(idCol))
-      .select(col(idCol), col("url_canonical"), col("domain"), col("text_clean"))
+      .join(meta, Seq("doc_id"))
+      .select(col("doc_id"), col("url_canonical"), col("domain"), col("text_clean"))
   }
 }

@@ -747,7 +747,8 @@ object Dedup {
     * runtime-filter `BloomFilterAggregate`, which silently CLAMPS the
     * sketch to 2^26 bits (8 MB) — beyond ~7 M keys at 1% the returned
     * filter saturates and flags nearly every probe (measured: 99.8%
-    * false-positive rate at 50 M keys; `tools/BloomShardSmoke`). The
+    * false-positive rate at 50 M keys; `git show
+    * 721304f:src/test/scala/graft/tools/BloomShardSmoke.scala`). The
     * direct build has no cap; per-task memory is one filter, the same as
     * the stat path's partial aggregates. */
   def seenFilter(df: DataFrame, keyCol: Column, expectedItems: Long,

@@ -250,7 +250,7 @@ object Urls {
     // transform form referenced the per-depth array three times under a
     // conditional, where codegen subexpression elimination does not
     // apply, tripling the per-row rule work (measured in
-    // tools/PslScaleSmoke).
+    // `git show 721304f:src/test/scala/graft/tools/PslScaleSmoke.scala`).
     val dom = aggregate(
       sequence(lit(1), n),
       struct(lit(0).as("exc"), lit(1).as("ps")),

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Audit-chain sync gate (r14 verdict ask): every query the driver
   * checks (= every `SparkEntry.queries` key) must be cited somewhere in
@@ -21,5 +22,20 @@ class DocSyncSpec extends AnyFunSuite {
   test("every oracleSql key has a matching queries entry") {
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(dangling.isEmpty, s"oracle SQL without a query: $dangling")
+  }
+
+  test("GraftSession.scala is the only session builder under src/") {
+    // split so this file does not match its own search
+    val needle = "SparkSession" + ".builder"
+    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src"))
+    val builders =
+      try files.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.ISO_8859_1).contains(needle))
+        .map(_.toString).toSeq.sorted
+      finally files.close()
+    assert(builders == Seq("src/main/scala/graft/GraftSession.scala"),
+      s"build sessions with GraftSession.local, not in: ${builders.mkString(", ")}")
   }
 }

@@ -52,7 +52,7 @@ class TwoPassCurationSpec extends SparkSuite {
   }
 
   private def run(df: DataFrame): Map[Long, String] =
-    TwoPassCuration.curate(df, Seq("bad-site.com"), nearDupThreshold = 0.9)
+    TwoPassCuration.curate(df, Seq("bad-site.com"))
       .select("doc_id", "text").as[(Long, String)].collect().toMap
 
   test("10× re-crawl duplication curates to the IDENTICAL document set") {
@@ -65,8 +65,7 @@ class TwoPassCurationSpec extends SparkSuite {
   }
 
   test("each stage's effect is visible across the seam") {
-    val out = TwoPassCuration.curate(crawl(1), Seq("bad-site.com"),
-      nearDupThreshold = 0.9)
+    val out = TwoPassCuration.curate(crawl(1), Seq("bad-site.com"))
     val ids = out.select("doc_id").as[Long].collect().toSet
     // blocklist: no bad-site docs survive
     assert(ids.forall(id => id < 200 || id >= 300), s"blocked ids leaked: $ids")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -37,6 +37,7 @@ import scala.jdk.CollectionConverters._
   *
   * Run: sbt "Test/runMain graft.tools.GenScale /tmp/gensf/g0.1 0.1"
   *      sbt "Test/runMain graft.tools.GenScale /tmp/gensf/g1 1.0"
+  * on `local[$SPARK_GRAFT_CPUS]` (default 32).
   */
 object GenScale {
 
@@ -55,13 +56,7 @@ object GenScale {
     require(args.length >= 2, "usage: GenScale <outDir> <sf>")
     val out = args(0)
     val sf = args(1).toDouble
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val nCustomer = (150000 * sf).toLong max 100
     val nSupplier = (10000 * sf).toLong max 20

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf0.1-vs-sf1 NATURAL-growth scaling comparison (r14 verdict ask #1) —
@@ -17,6 +16,7 @@ import org.apache.spark.sql.functions._
   *     holds for the genuinely input-independent tables.
   *
   * Run: sbt "Test/runMain graft.tools.ScaleCompare /tmp/gensf/g0.1 /tmp/gensf/g1"
+  * on `local[$SPARK_GRAFT_CPUS]` (default 32).
   */
 object ScaleCompare {
 
@@ -36,22 +36,14 @@ object ScaleCompare {
     require(args.length >= 2, "usage: ScaleCompare <smallDir> <bigDir>")
     val (small, big) = (args(0), args(1))
     val only = if (args.length > 2) args(2).split(",").toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the tables are single-FILE parquet (the driver layout, which the
-      // streaming pathGlobFilter queries require) — at g1 a 120 MB file
-      // is ONE input split under the 128 MB default, so a default-config
-      // run measures file count, not operator scaling (q_corr_matrix
-      // went 7.5× from a 1-task scan). A 100 TB deployment has thousands
-      // of splits; 4 MB splits give both scales that shape locally.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // the tables are single-FILE parquet (the testdata layout, which the
+    // streaming pathGlobFilter queries require) — at g1 a 120 MB file
+    // is ONE input split under the 128 MB default, so a default-config
+    // run measures file count, not operator scaling (q_corr_matrix
+    // went 7.5× from a 1-task scan). A 100 TB deployment has thousands
+    // of splits; 4 MB splits give both scales that shape locally.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
 
     def clear(): Unit = {
       spark.catalog.clearCache()

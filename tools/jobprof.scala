@@ -1,5 +1,5 @@
 // Job-level profile of one query: wall time + task time per Spark job.
-// SPARK_GRAFT_Q=q_twopass spark-shell ... -i tools/r16_jobprof.scala
+// SPARK_GRAFT_Q=q_twopass spark-shell ... -i tools/jobprof.scala
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 spark.sparkContext.setLogLevel("ERROR")
